@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import java.util.Locale
 import scala.collection.mutable
 
 /** Benchmark main. Prints ONE bare JSON line as the LAST stdout line (and
@@ -24,21 +25,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // The driver contract runs the bench at local[32] (32-thread, 128 GiB
     // box); SPARK_GRAFT_CPUS trims it for constrained local iteration.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, default 100: a 39-query suite of wide plans evicts
-      // generated classes between passes, so every pass re-runs Janino +
-      // JIT (r2_candidates benched 18.3/18.0/7.8 s across its passes with
-      // the default; isolated-and-warm the same plan is 2.3 s). Keeping
-      // classes cached makes the median measure the QUERY, not compilation.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus(32)
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val osBean = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -289,12 +277,8 @@ object Bench {
         System.err.println(f"[bench] stream_file WHOLE graph sec=" +
           f"$graphSec%.1f lines/s=${nLines / graphSec}%.0f " +
           f"stats=$statsG alerts=$alertsG (in-mem sec=$streamSec%.1f)")
-        val streamCore =
-          f""","stream":{"lines":$nLines,"sec":$streamSec%.1f,"lines_per_sec":${nLines / streamSec}%.0f,"stats_rows":$statsRows,"stats_rows_per_sec":${statsRows / streamSec}%.0f,"alerts":$alertRows,"s34_sec":$s34Sec%.1f}"""
-        (streamCore +
-          f""","stream_file":{"s34_sec":$fileSec%.1f,"alerts":$alertsF,"graph_sec":$graphSec%.1f,"graph_lines_per_sec":${nLines / graphSec}%.0f,"graph_stats_rows":$statsG,"graph_stats_rows_per_sec":${statsG / graphSec}%.0f,"graph_alerts":$alertsG}""",
-         streamCore +
-          f""","stream_file":{"s34_sec":$fileSec%.1f,"g_lps":${nLines / graphSec}%.0f}""")
+        streamBlocks(nLines, streamSec, statsRows, alertRows, s34Sec,
+          fileSec, alertsF, graphSec, statsG, alertsG)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] stream bench FAILED: ${e.getClass.getName}: ${e.getMessage}")
         errors("stream_graph") = e.getClass.getSimpleName
@@ -303,11 +287,10 @@ object Bench {
     }
     val streamJson = streamPair._1
     val streamJsonCompact = streamPair._2
-    def jnum(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, w, _, _) => s""""$k":${jnum(w)}""" }.mkString("{", ",", "}")
     val cpu = results.map { case (k, _, c, _) => s""""$k":${jnum(c)}""" }.mkString("{", ",", "}")
     val passJson = results.map { case (k, _, _, ps) =>
-      s""""$k":${ps.map(jnum).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
+      s""""$k":${ps.map(jnum(_)).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -348,13 +331,9 @@ object Bench {
     // clobbers the first's — which left round 14 with no committed
     // 32-core per-query detail at all. One file per cpus value keeps
     // both runs' detail on disk for the scaling comparison.
-    // cpus is a raw env string; the driver always passes an integer, but
-    // local[*]-style values must not produce a glob filename or break
-    // the queries line's JSON number below
-    val cpusTag = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "na"
-    try Files.writeString(Paths.get(s"bench_out_c$cpusTag.json"), full)
+    try Files.writeString(Paths.get(s"bench_out_c$cpus.json"), full)
     catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_out_c$cpusTag.json write failed: ${e.getMessage}") }
+      System.err.println(s"[bench] bench_out_c$cpus.json write failed: ${e.getMessage}") }
     // COMPACT final stdout line, NO per-query map: three straight rounds
     // proved the driver's log-tail buffer clips anything past a few
     // hundred bytes (r3's 2.8 KB wall-only map still arrived mid-key;
@@ -374,13 +353,35 @@ object Bench {
     // when the tail buffer is large enough and sees no change when it
     // is not (a clipped fragment no longer starts with '{' and parses
     // as nothing). Centisecond precision keeps it ~3.5 KB.
-    val qsCenti = results.map { case (k, w, _, _) => s""""$k":${f"$w%.2f"}""" }
-      .mkString("{", ",", "}")
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus.replace("\"", "") + "\""
-    println(s"""{"metric":"queries","unit":"sec","cpus":$cpusJson,"queries":$qsCenti}""")
+    println(queriesLine(cpus, results.map { case (k, w, _, _) => (k, w) }))
     // Bare, final stdout line (spark.stop() already happened so nothing
     // logs after it; run/outputStrategy passes it through un-prefixed).
     println(compact)
+  }
+
+  /** `v` with `digits` decimals. Locale.ROOT: a default locale with a
+    * decimal comma (de_DE) would otherwise write `1,5`, invalid JSON.
+    */
+  private[graft] def jnum(v: Double, digits: Int = 3): String =
+    s"%.${digits}f".formatLocal(Locale.ROOT, v)
+
+  /** The per-query stdout line: wall medians at centisecond precision. */
+  private[graft] def queriesLine(cpus: Int, walls: Seq[(String, Double)]): String = {
+    val qs = walls.map { case (k, w) => s""""$k":${jnum(w, 2)}""" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"queries","unit":"sec","cpus":$cpus,"queries":$qs}"""
+  }
+
+  /** The streaming blocks: (full artifact, compact stdout line). */
+  private[graft] def streamBlocks(nLines: Long, streamSec: Double,
+      statsRows: Long, alertRows: Long, s34Sec: Double, fileSec: Double,
+      alertsF: Long, graphSec: Double, statsG: Long,
+      alertsG: Long): (String, String) = {
+    val streamCore =
+      s""","stream":{"lines":$nLines,"sec":${jnum(streamSec, 1)},"lines_per_sec":${jnum(nLines / streamSec, 0)},"stats_rows":$statsRows,"stats_rows_per_sec":${jnum(statsRows / streamSec, 0)},"alerts":$alertRows,"s34_sec":${jnum(s34Sec, 1)}}"""
+    (streamCore +
+      s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"alerts":$alertsF,"graph_sec":${jnum(graphSec, 1)},"graph_lines_per_sec":${jnum(nLines / graphSec, 0)},"graph_stats_rows":$statsG,"graph_stats_rows_per_sec":${jnum(statsG / graphSec, 0)},"graph_alerts":$alertsG}""",
+     streamCore +
+      s""","stream_file":{"s34_sec":${jnum(fileSec, 1)},"g_lps":${jnum(nLines / graphSec, 0)}}""")
   }
 }

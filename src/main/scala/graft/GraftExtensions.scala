@@ -12,9 +12,8 @@ import graft.plans.JaccardJoinRewrite
   * rules ([[JaccardJoinRewrite]]: similarity theta-join →
   * inverted-index equi-join).
   *
-  * Usage:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * or spark.sql.extensions=graft.GraftExtensions.
+  * Usage: spark.sql.extensions=graft.GraftExtensions at session start,
+  * or [[GraftExtensions.register]] on a session that already exists.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -50,7 +49,7 @@ object GraftExtensions {
       (args: Seq[Expression]) => BigramHashes(args.head)))
 
   /** Register on an already-built session (temp functions) — for
-    * sessions not created via `withExtensions` (e.g. notebooks, tests).
+    * sessions started without `spark.sql.extensions` (notebooks, tests).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     functions.foreach { case (name, _, builder) =>

@@ -185,24 +185,28 @@ object PlanAudit {
     * bounded driver loops, same as any Verify pass.
     */
   def auditAll(spark: SparkSession, sfDir: String,
-      only: Set[String] = Set.empty): Seq[QueryAudit] =
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
+      only: Set[String] = Set.empty): Seq[QueryAudit] = {
+    // AQE off judges the STATIC shape (AQE can only ever improve on it);
+    // the caller's setting comes back after, since getOrCreate hands
+    // every caller in the JVM this same session
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .map { case (name, fn) =>
         auditOne(name, fn(spark, sfDir).queryExecution.executedPlan)
       }
+    finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None    => spark.conf.unset(aqe)
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("PLAN_AUDIT.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // audit the static shape
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session(4)
     spark.sparkContext.setLogLevel("ERROR")
     val audits = auditAll(spark, sfDir)
     val body = audits.map { a =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,18 +10,7 @@ import graft.streaming.ApmStreaming
 /** End-to-end pieces: driver flagship smoke, SQL-registered extensions,
   * and the streaming sink (S6/S7: foreachBatch + checkpoint).
   */
-class IntegrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntegrationSpec extends AnyFunSuite with LocalSpark {
 
   test("driver flagship entry() returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Layout
@@ -9,17 +8,7 @@ import graft.operators.Layout
   * input bytes, and range clustering that makes per-file key ranges
   * disjoint (the precondition for row-group/file pruning to pay off).
   */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with LocalSpark {
 
   test("compaction: file count from real bytes, rows preserved, " +
     "ranges disjoint") {
@@ -106,6 +95,7 @@ class LayoutSpec extends AnyFunSuite {
     // this assignment replaced
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec}
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       for ((name, df) <- Seq(
@@ -122,7 +112,7 @@ class LayoutSpec extends AnyFunSuite {
               "the events-table window funnel regressed")
         }
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("compactionPlan: partition of all files, contiguous time ranges, " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.PlanAudit
 
@@ -11,19 +10,7 @@ import graft.tools.PlanAudit
   * against the one regression class that is invisible at sf0.001 wall
   * time and fatal at 100 TB — an accidental all-pairs join.
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the audit judges the STATIC plan: AQE can only ever improve on it
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with LocalSpark {
 
   test("every registered query: zero cartesians, nested-loop joins " +
       "within their pinned bounded-broadcast counts") {
@@ -32,6 +19,19 @@ class PlanAuditSpec extends AnyFunSuite {
     val bad = audits.filter(_.flagged.nonEmpty)
     assert(bad.isEmpty, "plan regressions:\n" + bad.map(a =>
       s"  ${a.name}: ${a.flagged.mkString("; ")}").mkString("\n"))
+  }
+
+  test("auditAll leaves the session's AQE setting as it found it") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(aqe)
+    // no tables here, so the audited query throws: the restore must hold
+    // on that path too
+    val noData = java.nio.file.Files.createTempDirectory("graft_nodata").toString
+    try for (v <- Seq("true", "false")) {
+      spark.conf.set(aqe, v)
+      intercept[Exception](PlanAudit.auditAll(spark, noData, only = Set("q3_join")))
+      assert(spark.conf.get(aqe) == v)
+    } finally spark.conf.set(aqe, saved)
   }
 
   test("the pin list names only registered queries (no stale entries)") {

@@ -10,16 +10,7 @@ import graft.streaming.ApmStreaming
   * written while the sink is down park durably and replay, in original
   * batch order, once the sink recovers (stream_insert_db.js:326-353).
   */
-class RequeueSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RequeueSpec extends AnyFunSuite with LocalSpark {
 
   test("sink-down batches park, replay in order on recovery, then drain") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +10,7 @@ import graft.operators.{Alerts, ZScore}
   * the RocksDB state store must agree with the V1 flatMapGroupsWithState
   * folds and the batch/reference ports on the same data.
   */
-class StateV2Spec extends AnyFunSuite with RocksDbSupport {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateV2Spec extends AnyFunSuite with LocalSpark with RocksDbSupport {
 
   test("z-score V2 == batch fold on same data") {
     import spark.implicits._

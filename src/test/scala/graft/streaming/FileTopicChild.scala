@@ -84,14 +84,7 @@ object FileTopicChild {
       val took = t.beginTaskEpoch(args(2), args(3).toLong, args(4).toInt)
       println(s"FENCE=$took")
     case "stage4" =>
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh_child").toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Session(2)
       spark.sparkContext.setLogLevel("ERROR")
       ApmGraph.runStage4Queued(spark, args(1), ApmGraph.GraphCfg(),
         args(3), group = args(4), queueDir = Some(args(2)))
@@ -113,22 +106,14 @@ object FileTopicChild {
       val stage = args(1).toInt
       val (logsGlob, workDir, queueDir) = (args(2), args(3), args(4))
       val stop = Paths.get(args(5))
-      val builder = org.apache.spark.sql.SparkSession.builder()
-        .master("local[3]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh_child").toString)
-        .config("spark.ui.enabled", "false")
+      val spark = graft.Session(3)
       // optional state-store provider (e.g. RocksDB + changelog), so the
       // forked-topology spec can prove resume semantics per provider
       if (args.length > 6 && args(6).nonEmpty) {
-        builder.config("spark.sql.streaming.stateStore.providerClass", args(6))
-        builder.config("spark.sql.streaming.stateStore.rocksdb." +
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass", args(6))
+        spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled", "true")
-        ()
       }
-      val spark = builder.getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       // optional 8th arg: "ordered" opts stage 4 into the deterministic
       // event-time cooldown (requires the RocksDB provider in arg 7).
